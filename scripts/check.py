@@ -4,7 +4,7 @@ each oracle SQL in DuckDB over the same parquet tables and compare.
 
 Usage: python3 scripts/check.py [sfDir] [outDir] [--skip-verify] [names...]
 """
-import datetime, json, math, subprocess, sys
+import datetime, json, math, os, subprocess, sys
 
 import duckdb
 import pyarrow.parquet as pq
@@ -75,7 +75,9 @@ def main():
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sf} {out}{sub}'],
             capture_output=True, text=True, cwd="/root/repo",
-            env={**__import__("os").environ, "SPARK_GRAFT_CPUS": "8"})
+            # the caller's SPARK_GRAFT_CPUS, else this box's core count: a
+            # fixed 8 oversubscribed Verify's thread pool on smaller boxes
+            env={"SPARK_GRAFT_CPUS": str(os.cpu_count()), **os.environ})
         if r.returncode != 0:
             print(r.stdout[-4000:], r.stderr[-4000:])
             sys.exit(1)

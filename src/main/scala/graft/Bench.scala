@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and prints
   * one JSON line, mirroring the reference harness `tpch/tpcbench.py:91-102`.
   *
@@ -215,8 +217,16 @@ object Bench {
     // flaky retry must not convert a clean first reading into a reported
     // bench failure — churnGuard's -1 handling already keeps the first
     // reading when the retry dies.
+    //
+    // Generated-class compiles over these passes (CodegenMetrics samples
+    // once per codegen cache miss) go on the full line as
+    // codegen_compiles: each entry compiles its own classes on its first
+    // pass, so a count that jumps with no plan change means the cache
+    // thrashes again (see Session.codegenCacheEntries).
+    var codegenCompiles = 0L
     def timedPasses(name: String, fn: QueryFn, n: Int,
-                    recordError: Boolean = true): Double =
+                    recordError: Boolean = true): Double = {
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       try (1 to n).map(_ => onePass(fn)).min
       catch {
         case e: Throwable =>
@@ -224,7 +234,9 @@ object Bench {
           e.printStackTrace()
           if (recordError) errors ::= name
           -1.0
-      }
+      } finally
+        codegenCompiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    }
     // Deferred outlier queue (r15 verdict #1): a guard-fired entry is NOT
     // re-measured inline — r15's immediate retries ran inside the very
     // churn window that fired them and kept 3-13× inflated values. The
@@ -319,6 +331,7 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","tpch_subtotal":${ms(tpch)},""" +
         s""""queries":$qs,"errors":$errJson,"sf":"$sfDir",""" +
+        s""""codegen_compiles":$codegenCompiles,""" +
         s""""band_outliers":${outlierJson(outliers)},"churn_suspect":$suspectJson,""" +
         s"""$canaryFull,""" +
         s""""total_sec":${ms(total)},"tpch_subtotal_sec":${ms(tpch)}}"""

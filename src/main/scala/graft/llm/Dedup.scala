@@ -228,26 +228,27 @@ object Dedup {
   /** [[jaccard]] over an already-computed [[shingles]] table — the
     * shared-base entry point for callers that verify several candidate
     * sets against one corpus ([[lshTuning]]); identical expressions.
+    *
+    * Precondition: `sh` holds each (doc_id, shingle) row at most once, as
+    * [[shingles]] emits it. `array_intersect` counts DISTINCT common
+    * elements while the per-doc size is a row count, so duplicate rows
+    * give wrong jaccard values without any error.
+    *
+    * Size bound: each doc's whole shingle set is collected into ONE row
+    * (`collect_list`), so the largest document must fit in executor row
+    * memory; the exploded-join form this replaced streamed it.
     */
   private[llm] def jaccardFromShingles(sh: DataFrame,
                                        candidates: DataFrame): DataFrame = {
-    // Per-doc shingle SETS + in-place array_intersect replace the exploded
-    // candidate×shingle equi-join (r17 opt, guide §2.3/§2.4 — shuffle
-    // fewer bytes, remove shuffles): the old shape joined every candidate
-    // pair against BOTH docs' exploded shingle rows — pairs × shingles-
-    // per-doc intermediate rows through two exchanges plus a (doc_a,
-    // doc_b) re-aggregation. Measured at sf0.1 on llm_simhash_pr_curve's
-    // candidate set: 271k pairs × ~52 shingles/doc ≈ 14M shuffled shingle
-    // strings, 7.9 s of the entry's 10.3 s. Collecting each doc's
-    // (already-distinct) shingles ONCE and intersecting per pair moves
-    // each doc's set once per partner instead of once per partner per
-    // shingle row, with no post-join aggregation. array_intersect is a
-    // codegen'd expression (not a lambda HOF), |A∩B| over distinct
-    // elements equals the old join-match count exactly, and the size
-    // arithmetic is the same BIGINT expression — jaccard values are
-    // bit-identical, the DuckDB oracle untouched. Zero-overlap pairs
-    // emitted NO row in the join form; the filter preserves that contract
-    // ([[jaccardWithZeros]] is the keep-zeros variant).
+    // Per-doc shingle sets + in-place array_intersect replace the exploded
+    // candidate×shingle equi-join, which moved pairs × shingles-per-doc
+    // rows through two exchanges plus a (doc_a, doc_b) re-aggregation
+    // (measured at sf0.1 on llm_simhash_pr_curve: 271k pairs × ~52
+    // shingles/doc ≈ 14M shuffled strings, 7.9 s of the entry's 10.3 s).
+    // |A∩B| over distinct elements equals the old join-match count and the
+    // size arithmetic is the same BIGINT expression, so jaccard values are
+    // bit-identical. Zero-overlap pairs emitted no row in the join form;
+    // the filter keeps that contract ([[jaccardWithZeros]] keeps zeros).
     val docSets = sh.groupBy("doc_id")
       .agg(collect_list(col("shingle")).as("__sh_set"),
         count(lit(1)).as("__n_sh"))
